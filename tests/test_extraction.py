@@ -121,3 +121,93 @@ def test_error_fallback_never_raises():
     # pathological markup must not raise
     bad = "<p><a href='x" + "<" * 100 + "\x00<di v<<>"
     assert isinstance(extract_text(bad), str)
+
+
+# ---- regression pins for the crawl's per-page UDFs -------------------------
+# Pinned from the implementation itself, NOT reference evidence (the
+# reference golden above is skipped when its fixtures are absent). They
+# guard refactors of functions/udfs.py: both page UDFs must keep emitting
+# exactly these (text, outlinks), and their scoring tails must not move.
+
+_PIN_BASE = "http://example.com/dir/index.html"
+_PIN_INLINE = [
+    (
+        "<html>\n <body>\n\t<p>\n\t\tHello!\n\t</p>\n"
+        ' \t<a href="a.html">ab</a>\n </body>\n</html>',
+        "Hello!\n ab",
+        [("http://example.com/dir/a.html", "L")],
+    ),
+    ("<div>a</div><div>b</div>", "a b", []),
+    ("<span>a</span><span>b</span>", "ab", []),
+    ("one<br>two", "one two", []),
+    ("<p>x   y\t\nz</p>", "x y\nz", []),
+    ("<p>a</p><script>var x=1;</script><p>b</p>", "a\n b", []),
+    ("<style>p{}</style><p>c</p>", "c", []),
+    ("<pre>a  b\nc</pre>", "a  b\nc", []),
+    ("<html><head><title>T</title></head><body>B</body></html>", "T B", []),
+    ("<p>a&amp;b &lt;c&gt;</p>", "a&b <c>", []),
+    ("<p>one</p><p>two</p>", "one\n two", []),
+    ("<p>a</p>\n \n\n b", "a\n b", []),
+    (
+        "<p><a href='x" + "<" * 100 + "\x00<di v<<>",
+        "<a href='x" + "<" * 100 + "\x00<di v<<>",
+        [],
+    ),
+]
+
+
+def _page_udf_funcs():
+    from topicrawler_spark.datagen import topic_corpus
+    from topicrawler_spark.functions.udfs import make_page_ngrams_udf, make_page_process_udf
+    from topicrawler_spark.lm.local import LocalLM
+    from topicrawler_spark.lm.perplexity import DocumentScorer
+
+    class _Bc:  # stands in for the Spark broadcast the crawl passes
+        value = DocumentScorer(LocalLM.from_texts([topic_corpus(42)], order=3), "kneser-ney")
+
+    return make_page_process_udf(_Bc()).func, make_page_ngrams_udf(3).func
+
+
+def _text_links(frame) -> list:
+    return [
+        (t, [(d["url"], d["hop"]) for d in links])
+        for t, links in zip(frame["text"], frame["outlinks"])
+    ]
+
+
+def test_page_udfs_pin_inline_cases():
+    import pandas as pd
+
+    html = pd.Series([h.encode() for h, _, _ in _PIN_INLINE])
+    base = pd.Series([_PIN_BASE] * len(_PIN_INLINE))
+    expected = [(t, links) for _, t, links in _PIN_INLINE]
+    for func in _page_udf_funcs():
+        assert _text_links(func(html, base)) == expected
+
+
+def test_page_udfs_pin_corpus_sample():
+    import hashlib
+
+    import pandas as pd
+
+    from topicrawler_spark.datagen import generate_corpus
+
+    def digest(obj) -> str:
+        return hashlib.sha256(json.dumps(obj, sort_keys=True).encode()).hexdigest()
+
+    corpus = generate_corpus(n_pages=40, n_hosts=4, n_seeds=2, seed=7)
+    urls = sorted(corpus.pages)[:30]
+    html = pd.Series([corpus.pages[u] for u in urls])
+    process, ngrams = _page_udf_funcs()
+    by_process, by_ngrams = process(html, pd.Series(urls)), ngrams(html, pd.Series(urls))
+    for frame in (by_process, by_ngrams):
+        pages = [[u, t, [list(x) for x in links]] for u, (t, links) in zip(urls, _text_links(frame))]
+        assert sum(len(p[2]) for p in pages) == 87
+        assert digest(pages) == "5616bfc085ca63369dc508477470dcbdd51e4b5a1dad0997a36321c5ffb608b0"
+    assert digest([repr(p) for p in by_process["perp"]]) == (
+        "06b76ba80a7e167886a888ed5d598c5c91fc00661949d5c264478fa9f5e73898"
+    )
+    assert sum(len(g) for g in by_ngrams["ngrams"]) == 8256
+    assert digest([list(g) for g in by_ngrams["ngrams"]]) == (
+        "fe94819497a0f3701ebfc25787fc540a0cd5fef208cbe18ca9846cbcb3ac78ee"
+    )

@@ -97,7 +97,7 @@ def test_noop_refresh_parity(spark):
     for mr, mn in zip(ref.metrics, run.metrics):
         assert mr["admitted"] == mn["admitted"]
         assert mr["fetched"] == mn["fetched"]
-        assert mr["urls_new"] == mn["urls_new"]
+        assert mr["urls_discovered"] == mn["urls_discovered"]
         for k in ("perp_min", "perp_max", "perp_avg"):
             if mr[k] is None:
                 assert mn[k] is None

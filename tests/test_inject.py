@@ -54,7 +54,7 @@ def test_force_fetch_bypasses_seen(spark, setup):
     pp = prepare_pages(pages).localCheckpoint(eager=True)
     _, result = run_round(
         spark, after, pp, scorer_bc, robots, cfg,
-        collect_metrics=False, frontier_size_hint=0, ops=ops, host_fetched_map={},
+        frontier_size_hint=0, ops=ops, host_fetched_map={},
     )
     logged = {r["canon"] for r in result.fetch_log.collect()}
     assert fetched_canon in logged

@@ -50,7 +50,7 @@ def test_join_scored_crawl_matches_broadcast(spark):
     for mb, mj in zip(run_b.metrics, run_j.metrics):
         assert mb["admitted"] == mj["admitted"]
         assert mb["fetched"] == mj["fetched"]
-        assert mb["urls_new"] == mj["urls_new"]
+        assert mb["urls_discovered"] == mj["urls_discovered"]
         for k in ("perp_min", "perp_max", "perp_avg"):
             if mb[k] is None:
                 assert mj[k] is None
@@ -84,7 +84,7 @@ def test_pivot_lookup_crawl_matches_broadcast(spark):
     assert _frontier_rows(run_b) == _frontier_rows(run_p)
     for mb, mp in zip(run_b.metrics, run_p.metrics):
         assert mb["admitted"] == mp["admitted"]
-        assert mb["urls_new"] == mp["urls_new"]
+        assert mb["urls_discovered"] == mp["urls_discovered"]
         for k in ("perp_min", "perp_max", "perp_avg"):
             if mb[k] is None:
                 assert mp[k] is None

@@ -358,3 +358,42 @@ def test_pivot_join_path_matches_join_per_key(spark, order):
     for g, v in legacy.items():
         assert pivot[g] == pytest.approx(v, rel=1e-12, abs=1e-300), g
     counts.unpersist()
+
+
+def test_stats_lookup_scores_its_own_stats(spark):
+    """A prebuilt ``StatsLookup`` stands in for the stats dimension (there is
+    no separate stats argument to fall out of step with it): scoring with
+    the lookup must equal scoring with the dimension it was built from, in
+    both lookup forms, and must differ from another LM's dimension."""
+    from topicrawler_spark.lm.counting import (
+        build_stats_lookup,
+        kn_join_exprs,
+        kn_join_setup,
+        score_kn_join_with_stats,
+    )
+
+    order = 3
+    seqs = [t.split() for t in TEXTS]
+
+    def setup(sequences):
+        sentences = spark.createDataFrame([(s,) for s in sequences], "tokens array<string>")
+        return kn_join_setup(count_ngrams(sentences, order=order), order)
+
+    stats, consts = setup(seqs)
+    other_stats, _ = setup(seqs[:2])
+    exprs = kn_join_exprs(order, consts)
+    lookup = build_stats_lookup(stats, exprs[0], ["cnt", "nf_tot", "np_tot", "nfp_tot"])
+    cand = _order_n_candidates(spark, seqs, order)
+
+    def scores(source, pivot):
+        return {
+            r["ngram"]: r["kn_log10"]
+            for r in score_kn_join_with_stats(
+                cand, source, order, consts, exprs=exprs, unique_input=pivot
+            ).collect()
+        }
+
+    for pivot in (False, True):
+        own = scores(stats, pivot)
+        assert scores(lookup, pivot) == own
+        assert scores(other_stats, pivot) != own

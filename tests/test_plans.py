@@ -133,7 +133,7 @@ def _mini_round(spark, by_host=False, **cfg_kw):
     pp = prepare_pages(pages, by_host=by_host).localCheckpoint(eager=True)
     return run_round(
         spark, state, pp, scorer_bc, robots, cfg,
-        collect_metrics=False, frontier_size_hint=0, ops=ops, host_fetched_map={},
+        frontier_size_hint=0, ops=ops, host_fetched_map={},
     )
 
 
@@ -249,7 +249,7 @@ def test_scoring_stage_is_host_partitioned(spark):
     pp = prepare_pages(pages).localCheckpoint(eager=True)
     _, result = run_round(
         spark, state, pp, scorer_bc, robots, cfg,
-        collect_metrics=False, frontier_size_hint=0, ops=ops, host_fetched_map={},
+        frontier_size_hint=0, ops=ops, host_fetched_map={},
     )
     plan = _plan(result.results, "formatted")
     assert "ArrowEvalPython" in plan  # the scoring stage

@@ -29,7 +29,7 @@ from topicrawler_spark.crawl.round import (
 )
 
 STATE_TABLES = ("frontier", "seen_delta", "host_fetched")
-LOG_TABLES = ("results", "fetch_log", "partition_metrics")
+LOG_TABLES = ("results", "fetch_log")
 
 
 class CheckpointStore:
@@ -66,13 +66,10 @@ class CheckpointStore:
         # newly-discovered segment (the Iceberg-append equivalent — at 10^10
         # URLs rewriting the full set per round would be an ~80 GB write);
         # round 0's segment is the seed set, resume() unions the segments
-        if result is None:
-            if seen_delta is None:
-                seen_delta = state.seen
-        else:
-            seen_delta = result.enqueued.select("url_hash", "canon")
-            if result.seen_extra is not None:
-                seen_delta = seen_delta.unionByName(result.seen_extra)
+        if result is not None:
+            seen_delta = result.seen_segment
+        elif seen_delta is None:
+            seen_delta = state.seen
         seen_delta.write.mode("overwrite").parquet(self._dir(r, "seen_delta"))
         manifest = {"round": r, "tables": list(STATE_TABLES)}
         if state.bloom is not None:
@@ -97,9 +94,6 @@ class CheckpointStore:
         if result is not None:
             result.results.write.mode("overwrite").parquet(self._dir(r, "results"))
             result.fetch_log.write.mode("overwrite").parquet(self._dir(r, "fetch_log"))
-            result.partition_metrics.write.mode("overwrite").parquet(
-                self._dir(r, "partition_metrics")
-            )
             manifest["tables"] += list(LOG_TABLES)
             manifest["metrics"] = {
                 k: (None if v is None else (float(v) if isinstance(v, float) else v))

@@ -1,14 +1,18 @@
 """The round-loop driver: seeds -> N crawl rounds, checkpointed, resumable.
 
-Set SPARK_GRAFT_TIMING=1 to print per-round phase timings to stderr."""
+Every round returns one metrics dict (also written to the round's checkpoint
+manifest in store mode): the counters observed on the round's own jobs
+(``RoundResult.observed``) plus three driver timings in seconds —
+``plan_s`` (building the round's plan), ``exec_s`` (the cache fill and the
+per-host totals) and ``commit_wait_s`` (time blocked on the previous round's
+state commit: the background committer in memory mode, the synchronous
+store commit and re-read in store mode)."""
 
 from __future__ import annotations
 
-import os
-import sys
 import threading
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,11 +21,18 @@ from topicrawler_spark.crawl.checkpoint import CheckpointStore
 from topicrawler_spark.crawl.config import CrawlConfig
 from topicrawler_spark.crawl.robots import build_robots_table
 from topicrawler_spark.crawl.round import (
+    HOST_SCHEMA,
     CrawlState,
     init_state,
     run_round,
 )
 from topicrawler_spark.lm.perplexity import DocumentScorer
+
+
+_AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_EMPTY_RELATION_RULE = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
 
 
 @dataclass
@@ -43,6 +54,9 @@ def run_crawl(
     pages_prepared: bool = False,
     lm_counts=None,
 ) -> CrawlRun:
+    """``collect_metrics`` is accepted and ignored — every round reports the
+    same metrics (see the module docstring); the keyword stays for the
+    benchmark harness under ``perfbench/``, which passes it."""
     cfg = cfg or CrawlConfig()
     if cfg.score_mode == "join" and lm_counts is None:
         raise ValueError("score_mode='join' requires the lm_counts DataFrame")
@@ -104,7 +118,6 @@ def run_crawl(
     ops = build_round_ops(cfg, scorer_bc, robots, join_scorer=join_scorer)
 
     all_metrics: list[dict] = []
-    empty_frontier = False
     # Driver-side budget fast path: only while the robots host count stayed
     # below the collect threshold (robots.delays present). Past it the
     # per-round host_fetched collect would itself be a driver bottleneck, so
@@ -117,14 +130,6 @@ def run_crawl(
         if distributed_budget
         else {r["host"]: r["fetched"] for r in state.host_fetched.collect()}
     )
-
-    def _fetched_total(hf) -> int:
-        if host_fetched_map is not None:
-            return sum(host_fetched_map.values())
-        row = hf.agg(F.coalesce(F.sum("fetched"), F.lit(0)).alias("t")).collect()[0]
-        return int(row["t"])
-
-    prev_fetched_total = _fetched_total(state.host_fetched)
     # previous round's fetched-page count — run_round's scoring-bin hint
     # (None on the first round: the frontier-size hint stands in there)
     last_fetched: int | None = None
@@ -137,6 +142,7 @@ def run_crawl(
     frontier_hint: int | None = len(seeds) if state.round_no == 0 else None
     aqe_orig = spark.conf.get("spark.sql.adaptive.enabled", "true")
     shuffle_orig = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    excluded_orig = spark.conf.get(_AQE_EXCLUDED_RULES, None)
     cores = spark.sparkContext.defaultParallelism
     # None = frontier emptiness unknown (fresh/resumed state): check once.
     # After a round that discovered > 0 URLs the frontier is non-empty by
@@ -151,27 +157,37 @@ def run_crawl(
     # any foreground action, so no two jobs race to compute a shared cache.
     bg_thread: threading.Thread | None = None
     bg_error: list[BaseException] = []
-    t_wait = 0.0
+    # the next round's commit_wait_s, accumulated until it is reported
+    wait_s = 0.0
     # rounds since the seen union was last compacted to a single leaf
     seen_seg_rounds = 0
 
     def _join_bg() -> None:
-        nonlocal bg_thread, t_wait
+        nonlocal bg_thread, wait_s
         if bg_thread is not None:
             t0 = time.time()
             bg_thread.join()
-            t_wait = time.time() - t0
+            wait_s += time.time() - t0
             bg_thread = None
             if bg_error:
                 raise bg_error.pop()
 
     try:
+        # At-scale rounds run under AQE, which swaps a subtree over a stage
+        # that came out empty (a round that admits nothing) for an
+        # EmptyRelation leaf. The caches nested below it then drop out of
+        # the executed plan, and their observed counters with them — Spark
+        # completes those observations with an empty row. Keep the subtrees.
+        spark.conf.set(
+            _AQE_EXCLUDED_RULES,
+            ",".join(filter(None, [excluded_orig, _AQE_EMPTY_RELATION_RULE])),
+        )
         for _ in range(state.round_no, rounds):
-            if empty_frontier or (last_enq is None or last_enq == 0):
+            if not last_enq:
                 # rare path (fresh/resumed state or a zero-discovery round):
                 # the emptiness probe is an action — sync with the committer
                 _join_bg()
-                if empty_frontier or state.frontier.isEmpty():
+                if state.frontier.isEmpty():
                     break
             # Post-resume with bloom enabled: one count over the committed
             # (parquet-backed) seen set — needed for bloom sizing anyway, and
@@ -215,8 +231,6 @@ def run_crawl(
             if cfg.bloom_min_seen is not None and (
                 frontier_hint is None or frontier_hint >= cfg.bloom_min_seen
             ):
-                from dataclasses import replace as _dc_replace
-
                 from topicrawler_spark.crawl.bloom import BloomParams, bloom_add
 
                 active = state.bloom_params or (
@@ -237,39 +251,70 @@ def run_crawl(
                 ):
                     build = BloomParams.for_keys(frontier_hint, n_hashes=cfg.bloom_hashes)
                 if build is not None:
-                    state = _dc_replace(
+                    state = replace(
                         state,
                         bloom=bloom_add(
                             spark, None, state.seen.select("url_hash"), build
                         ).localCheckpoint(eager=False),
                         bloom_params=build,
                     )
-            timing = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-            if collect_metrics:
-                # metrics mode runs actions INSIDE run_round — sync with the
-                # background committer first (bench mode is action-free in
-                # run_round, so the overlap only exists there)
-                _join_bg()
             t0 = time.time()
             # the pre-round seen set: a union of materialized leaves that the
             # post-round segment checkpoint extends without re-copying it
             prev_seen = state.seen
             state, result = run_round(
                 spark, state, pages, scorer_bc, robots, cfg,
-                collect_metrics=collect_metrics, frontier_size_hint=frontier_hint,
-                ops=ops, host_fetched_map=host_fetched_map,
-                fetched_hint=last_fetched,
+                frontier_size_hint=frontier_hint, ops=ops,
+                host_fetched_map=host_fetched_map, fetched_hint=last_fetched,
             )
             t_plan = time.time() - t0
             all_metrics.append(result.metrics)
             # plan construction is done — sync with the previous round's
             # background committer before this round's first action
             _join_bg()
+            t0 = time.time()
+            # Cache fill, one consumer per cache: join-mode scoring fills
+            # the Arrow-pass cache first, then counting the discovery set
+            # builds the admitted, scored and discovery caches (see
+            # RoundResult.discovered) and reports every observed counter.
+            # Everything after this rescans built caches.
+            for _cache in result.score_prefill:
+                _cache.count()
+            result.discovered.count()
+            # per-host fetch totals for the next round's budget
+            if not distributed_budget:
+                # threshold-gated small table: one task instead of a
+                # shuffle-partition fan of micro-tasks (launch latency is
+                # per-round driver time that does not shrink with cores)
+                rows = [
+                    (r["host"], r["fetched"])
+                    for r in state.host_fetched.select("host", "fetched")
+                    .coalesce(1)
+                    .collect()
+                ]
+                host_fetched_map = dict(rows)
+                state = replace(
+                    state, host_fetched=spark.createDataFrame(rows, HOST_SCHEMA)
+                )
+            elif store is None:
+                # never collect the (at-scale, host-cardinality) fetch
+                # totals: materialize and cut lineage executor-side (the
+                # store commit writes them instead)
+                state = replace(
+                    state, host_fetched=state.host_fetched.localCheckpoint(eager=True)
+                )
+            for obs in result.observed:
+                result.metrics.update(obs.get)
+            result.metrics.update(
+                plan_s=round(t_plan, 3),
+                exec_s=round(time.time() - t0, 3),
+                commit_wait_s=round(wait_s, 3),
+            )
+            wait_s = 0.0
             # prereq mode: the seen set also grows by the synthesized robots
             # rows (cached in run_round), which urls_discovered never counts —
             # fold them into the hint increment or the bloom saturation
-            # rebuild fires late on robots-heavy crawls. One count over a
-            # cached frame, off the bench path (seen_extra is None there).
+            # rebuild fires late on robots-heavy crawls
             seen_extra_rows = (
                 result.seen_extra.count() if result.seen_extra is not None else 0
             )
@@ -307,20 +352,7 @@ def run_crawl(
                     # the per-refresh lineage growth to a leaf
                     lm_refreshed = lm_refreshed.localCheckpoint(eager=True)
             if store is not None:
-                # backfill the throughput counters BEFORE commit so the
-                # persisted manifest carries them (bench mode leaves
-                # urls_discovered None; 'fetched' derives from the per-host
-                # totals delta). enqueued/host_fetched read from cached
-                # intermediates — cheap rescans.
-                if result.metrics.get("urls_discovered", 0) is None:
-                    result.metrics["urls_discovered"] = result.enqueued.count()
-                if not distributed_budget:
-                    host_fetched_map = {
-                        r["host"]: r["fetched"] for r in state.host_fetched.collect()
-                    }
-                total_fetched = _fetched_total(state.host_fetched)
-                result.metrics.setdefault("fetched", total_fetched - prev_fetched_total)
-                prev_fetched_total = total_fetched
+                t0 = time.time()
                 store.commit_round(state, result, lm_counts=lm_refreshed)
                 # re-read committed state: cuts the lazy lineage chain and makes
                 # the carried state exactly the committed bytes
@@ -330,84 +362,13 @@ def run_crawl(
                     lm_refreshed = store.read(spark, state.round_no, "lm_counts")
                 for df in result.cached:
                     df.unpersist()
+                wait_s = time.time() - t0
             else:
-                # memory-only mode: the round executes as TWO queries —
-                #  1. the fused per-host totals + discovery-counter collect.
-                #    This is the round's HEAVY job: it materializes the cached
-                #    admitted/scored/new_unique intermediates (fetch join,
-                #    Arrow scoring pass, expansion, dedup) that everything
-                #    else rescans.
-                #  2. the frontier + seen checkpoint writes — pure rescans of
-                #    those caches, run in a BACKGROUND thread overlapping the
-                #    next round's plan construction; joined before the next
-                #    foreground action.
-                t0 = time.time()
-                need_enq = result.metrics.get("urls_discovered", 0) is None
-                # Cache-fill serialization: the fused round job's DAG scans
-                # the cached Arrow-scored relation from SIBLING stages. The
-                # task scheduler launches the second sibling's tasks as the
-                # first one's final wave drains, and any partition it reaches
-                # before the twin finishes re-runs the entire Python scoring
-                # pass for that partition — the duplication lands on exactly
-                # the straggler (skewed-host) partitions and grows with the
-                # number of concurrent task slots (measured: +25-30% scoring
-                # core-seconds at local[8], +8% at local[2]; on a wide
-                # cluster every sibling task slot is a potential duplicate).
-                # One dedicated count() builds the cache (and the admitted
-                # cache beneath it) at full parallelism with no competing
-                # stage, then every fused-job stage scans built partitions.
-                # Metrics mode skips this: run_round's in-round counters
-                # already materialized the cache sequentially.
-                if not collect_metrics:
-                    # join-mode scoring: fill the Arrow-pass cache first
-                    # (single consumer), then the perp-joined cache (its two
-                    # sibling branches then hit a built cache) — see
-                    # RoundResult.score_prefill.
-                    for _cache in result.score_prefill:
-                        _cache.count()
-                    if result.score_cache is not None:
-                        result.score_cache.count()
-                if distributed_budget:
-                    # never collect the (at-scale, host-cardinality) fetch
-                    # totals: materialize and cut lineage executor-side
-                    host_fetched = state.host_fetched.localCheckpoint(eager=True)
-                    total_fetched = _fetched_total(host_fetched)
-                    if need_enq:
-                        result.metrics["urls_discovered"] = result.enqueued.count()
-                else:
-                    # ONE job for the per-host totals AND the discovery
-                    # counter (both rescan this round's caches; fusing them
-                    # saves a job launch per round — fixed driver latency that
-                    # does not shrink with cores). The counter rides along as
-                    # a sentinel-keyed row ('~' never starts a host key).
-                    hf = state.host_fetched.select("host", "fetched")
-                    if need_enq:
-                        hf = hf.unionByName(
-                            result.enqueued.groupBy()
-                            .agg(F.count(F.lit(1)).alias("fetched"))
-                            .select(F.lit("~enq").alias("host"), "fetched")
-                        )
-                    # threshold-gated small table: one task instead of a
-                    # shuffle-partition fan of micro-tasks (launch latency is
-                    # per-round driver time that does not shrink with cores)
-                    rows = hf.coalesce(1).collect()
-                    host_rows = [
-                        (r["host"], r["fetched"]) for r in rows if r["host"] != "~enq"
-                    ]
-                    if need_enq:
-                        result.metrics["urls_discovered"] = next(
-                            (int(r["fetched"]) for r in rows if r["host"] == "~enq"), 0
-                        )
-                    host_fetched_map = dict(host_rows)
-                    total_fetched = sum(f for _, f in host_rows)
-                    host_fetched = (
-                        spark.createDataFrame(host_rows, "host string, fetched long")
-                        if host_rows
-                        else spark.createDataFrame([], "host string, fetched long")
-                    )
-                result.metrics.setdefault("fetched", total_fetched - prev_fetched_total)
-                prev_fetched_total = total_fetched
-                t_exec = time.time() - t0
+                # memory-only mode: the frontier + seen checkpoint writes are
+                # pure rescans of the filled caches; they run in a BACKGROUND
+                # thread overlapping the next round's plan construction and
+                # are joined before the next foreground action.
+                #
                 # lazy localCheckpoints: flatten the frontier's plan to a
                 # leaf; the background committer materializes it (the bloom's
                 # cogroup chain stays lazy — it materializes inside the next
@@ -422,10 +383,7 @@ def run_crawl(
                 # cfg.seen_compact_every rounds the union compacts to one
                 # leaf so plan width stays bounded over a long crawl.
                 seen_seg_rounds += 1
-                if (
-                    result.seen_segment is not None
-                    and seen_seg_rounds < cfg.seen_compact_every
-                ):
+                if seen_seg_rounds < cfg.seen_compact_every:
                     seen_commit = result.seen_segment.localCheckpoint(eager=False)
                     seen = prev_seen.unionByName(seen_commit)
                 else:
@@ -460,18 +418,9 @@ def run_crawl(
                     target=_commit, name="round-committer", daemon=True
                 )
                 bg_thread.start()
-                state = CrawlState(
-                    state.round_no, frontier, seen, host_fetched, bloom,
-                    robots_state, state.bloom_params,
+                state = replace(
+                    state, frontier=frontier, seen=seen, bloom=bloom, robots=robots_state
                 )
-                empty_frontier = False
-                if timing:
-                    print(
-                        f"[round {state.round_no}] plan={t_plan:.2f}s exec={t_exec:.2f}s "
-                        f"bgwait={t_wait:.2f}s "
-                        f"enq={result.metrics.get('urls_discovered')} fetched={result.metrics.get('fetched')}",
-                        file=sys.stderr,
-                    )
             if lm_refreshed is not None:
                 # rebuild the scoring campaign from the refreshed table:
                 # stats dimension + discounts/histogram constants + base
@@ -494,10 +443,9 @@ def run_crawl(
             # next round's scoring-bin hint: this round's fetched count is
             # the best action-free predictor of next round's page volume
             # (admission quotas move slowly round-to-round)
-            last_fetched = result.metrics.get("fetched") or last_fetched
+            last_fetched = result.metrics["fetched"] or last_fetched
             # running upper bound on frontier size: everything ever discovered
-            enq = result.metrics.get("urls_discovered", result.metrics.get("urls_new", 0)) or 0
-            last_enq = enq
+            last_enq = enq = result.metrics["urls_discovered"]
             if frontier_hint is None:
                 # first post-resume round: one count over the (parquet-backed,
                 # just-committed) seen set restores hint-driven regime
@@ -513,4 +461,8 @@ def run_crawl(
         # them even when a round fails mid-crawl
         spark.conf.set("spark.sql.adaptive.enabled", aqe_orig)
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_orig)
+        if excluded_orig is None:
+            spark.conf.unset(_AQE_EXCLUDED_RULES)
+        else:
+            spark.conf.set(_AQE_EXCLUDED_RULES, excluded_orig)
     return CrawlRun(state, all_metrics)

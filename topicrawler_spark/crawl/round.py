@@ -12,6 +12,10 @@ in-round dedup (first discovery wins) --> anti-join seen --> robots gate -->
 deterministic ordinal --> frontier_{r+1}, seen', host_fetched', results_r,
 fetch_log_r, metrics_r
 
+The round runs no Spark action: its counters are ``DataFrame.observe``
+aggregates on the frames it caches (admitted, scored, the discovery set),
+reported by the driver's cache-fill job and read off ``RoundResult.observed``.
+
 Ordinals are (round_added, rank_within_round) pairs — lexicographically
 identical to the reference's monotone 48-bit arrival ordinal, but assigned
 with a two-phase rank instead of a global sequence point.
@@ -21,11 +25,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from topicrawler_spark.crawl.config import CrawlConfig
-from topicrawler_spark.crawl.priority import apply_priority
+from topicrawler_spark.crawl.priority import HIGH, HIGHEST, MEDIUM, NORMAL, apply_priority
 from topicrawler_spark.crawl.ranking import (
     partition_probe_ints,
     per_host_top_k,
@@ -157,33 +161,35 @@ def build_round_ops(
 class RoundResult:
     fetch_log: DataFrame  # round, host, host_rank, canon, url
     results: DataFrame  # url, canon, host, perp, text, plain_abbrv
-    metrics: dict
-    partition_metrics: DataFrame
+    metrics: dict  # {"round": r}; the driver adds the observed counters
     cached: tuple = ()  # cached intermediates; unpersist after state commit
-    enqueued: DataFrame | None = None  # the newly enqueued rows (lazy)
+    # the round's discovery set (cached): unique in-scope candidates after
+    # the seen anti-join, before the robots gate — robots-blocked URLs did
+    # the full expansion work and are marked seen, they just never enqueue.
+    # Counting it is the round's cache-fill job: it builds the admitted,
+    # scored and discovery caches with each cache's plan as the ONLY
+    # consumer of the one beneath it. Submitted together, the sibling stages
+    # of a later job that each scan the scored cache race its fill, and
+    # every task that reaches a partition before its twin finishes
+    # recomputes the whole Python pass for it (measured at local[8]: +25-30%
+    # duplicate scoring core-seconds per round, concentrated on the
+    # straggler partitions, growing with core count).
+    discovered: DataFrame | None = None
+    # Observations whose metrics (named counters) report on the job that
+    # fills the caches above; Observation.get blocks until then
+    observed: tuple = ()
     # additional (url_hash, canon) rows this round appended to the seen set
-    # beyond `enqueued` (prereq-mode synthesized robots URLs) — the commit
-    # must include them in the round's seen_delta segment or resume would
-    # silently forget them
+    # beyond `discovered` (prereq-mode synthesized robots URLs); they are
+    # part of `seen_segment`, and the driver folds their count into its
+    # frontier-size hint
     seen_extra: DataFrame | None = None
-    # the cached frame whose materialization runs the round's Arrow scoring
-    # pass (`scored` / `with_ng`). In action-free (bench) mode the fused
-    # round job contains SIBLING stages that each scan this cache; submitted
-    # together they race the cache fill, and every task that reaches a
-    # partition before its twin finishes recomputes the whole Python pass
-    # for it (measured at local[8]: +25-30% duplicate scoring core-seconds
-    # per round, concentrated on exactly the straggler partitions — and the
-    # duplication grows with core count). The driver materializes this frame
-    # with one dedicated job BEFORE the fused collect so every downstream
-    # stage scans a fully built cache.
-    score_cache: DataFrame | None = None
-    # caches `score_cache` itself depends on, in dependency order — join-mode
+    # caches the scored cache depends on, in dependency order — join-mode
     # scoring sets (with_ng,): the per-page perp chain inside `scored` scans
     # the Arrow-pass cache from TWO sibling branches (the distinct-ngram
     # score and the join's probe side), so `with_ng` must be built by its own
     # single-consumer job before `scored`'s fill or the siblings race and
     # re-run the Python pass per stolen partition. The driver counts these
-    # before `score_cache`.
+    # before `discovered`.
     score_prefill: tuple = ()
     # this round's (url_hash, canon) additions to the seen set — the SEGMENT
     # whose union with the prior seen set IS the new state's seen. Memory
@@ -427,7 +433,6 @@ def run_round(
     scorer_bc,
     robots: RobotsTable,
     cfg: CrawlConfig | None = None,
-    collect_metrics: bool = True,
     frontier_size_hint: int | None = None,
     ops: RoundOps | None = None,
     host_fetched_map: dict[str, int] | None = None,
@@ -450,6 +455,7 @@ def run_round(
         frontier_size_hint is not None and frontier_size_hint < cfg.salt_min_frontier
     )
     n_salt = 1 if small_round else cfg.n_salt
+    observed: list[Observation] = []
 
     # ---- 0. prerequisite scheduling (PreconditionEnforcer mapping) --------
     # In prereq mode robots rules are crawl STATE (state.robots), not a
@@ -623,8 +629,10 @@ def run_round(
             .select("host")
         )
         fr = fr.join(F.broadcast(active), "host", "left_semi")
-    admitted = per_host_top_k(fr, "k", ORDER_COLS, n_salt=n_salt).drop(
-        "quota", "fetched", "k"
+    admitted = _observe(
+        per_host_top_k(fr, "k", ORDER_COLS, n_salt=n_salt).drop("quota", "fetched", "k"),
+        observed,
+        F.count(F.lit(1)).alias("admitted"),
     )
     admitted.cache()
     # per round the admitted set is bounded by sum(host quotas) — a broadcast
@@ -752,8 +760,7 @@ def run_round(
                 "perp": F.col("_pp.perp"),
             }
         ).drop("_pp")
-        scored.cache()
-        score_cached: tuple = (scored,)
+        score_prefill: tuple = ()
     else:
         # relational scoring: the page UDF emitted gated ngrams; score each
         # DISTINCT ngram once against the per-crawl stats dimension, re-join
@@ -768,8 +775,8 @@ def run_round(
         # (~2x task-seconds at 8 cores vs 2). So: cache `with_ng` (one Arrow
         # pass over html), cache `scored` (what everything rescans), and do
         # NOT cache `per` — it materializes exactly once inside `scored`'s
-        # dedicated fill, after `with_ng` is already built (the driver fills
-        # the two caches in dependency order; see RoundResult.score_prefill).
+        # fill, after `with_ng` is already built (the driver fills the two
+        # caches in dependency order; see RoundResult.score_prefill).
         from topicrawler_spark.lm.perplexity import join_perp_column, score_pages_join
 
         with_ng = base_scored.withColumns(
@@ -806,10 +813,21 @@ def run_round(
             .withColumn("perp", F.when(F.col("fetch_ok") & ~is_robots, perp_tree))
             .drop("ngrams", "_perp_s", "_perp_n")
         )
-        scored.cache()
-        score_cached = (with_ng, scored)
+        score_prefill = (with_ng,)
+    page = F.col("fetch_ok") & ~is_robots
+    scored = _observe(
+        scored,
+        observed,
+        F.count(F.when(F.col("fetch_ok"), 1)).alias("fetched"),
+        F.count(F.when(page, 1)).alias("scored"),
+        F.min(F.when(page & (F.col("perp") > 0), F.col("perp"))).alias("perp_min"),
+        F.max(F.when(page, F.col("perp"))).alias("perp_max"),
+        F.avg(F.when(page & (F.col("perp") > 0), F.col("perp"))).alias("perp_avg"),
+        F.count(F.when(page & (F.col("perp") <= 1), 1)).alias("n_rejected_pages"),
+    )
+    scored.cache()
 
-    results = scored.filter(F.col("fetch_ok") & ~is_robots).select(
+    results = scored.filter(page).select(
         F.lit(round_no).alias("round"), "url", "canon", "host", "perp", "text", "hops"
     )
 
@@ -955,7 +973,6 @@ def run_round(
     seen_side = (
         F.broadcast(state.seen) if bcast_seen else state.seen
     ).select(F.col("url_hash").alias("_seen_h"))
-    _bloom_fresh = _bloom_suspect = None
     if state.bloom is not None:
         # Bloom pre-filter: definitely-new candidates skip the exact
         # anti-join against the (10^10-row) seen table entirely; only the
@@ -964,11 +981,19 @@ def run_round(
         from topicrawler_spark.crawl.bloom import bloom_probe
 
         probed = bloom_probe(cands, state.bloom, state.bloom_params or cfg.bloom_params())
-        fresh = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        _bloom_fresh, _bloom_suspect = fresh, None
+        # pre-filter effectiveness counters: `fresh` candidates skip the
+        # exact seen anti-join entirely; only `suspect` probes it
+        fresh = _observe(
+            probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen"),
+            observed,
+            F.count(F.lit(1)).alias("bloom_fresh"),
+        )
         if cfg.bloom_exact_confirm:
-            suspect = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-            _bloom_suspect = suspect
+            suspect = _observe(
+                probed.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
+                observed,
+                F.count(F.lit(1)).alias("bloom_suspect"),
+            )
             confirmed = suspect.join(
                 seen_side, suspect["url_hash"] == F.col("_seen_h"), "left_anti"
             )
@@ -983,6 +1008,15 @@ def run_round(
             cands["url_hash"] == F.col("_seen_h"),
             "left_anti",
         )
+    new_unique = _observe(
+        new_unique,
+        observed,
+        F.count(F.lit(1)).alias("urls_discovered"),
+        *[
+            F.count(F.when(F.col("directive") == d, 1)).alias(f"n_directive_{d}")
+            for d in (HIGHEST, HIGH, MEDIUM, NORMAL)
+        ],
+    )
     new_unique.cache()
 
     # scheduled => seen (robots-blocked URLs are seen but never enqueued).
@@ -1042,7 +1076,7 @@ def run_round(
         )
     ).unionByName(retry)
 
-    # ---- 5. budgets + metrics -------------------------------------------------
+    # ---- 5. budgets ---------------------------------------------------------
     fetch_counts = (
         scored.filter(F.col("fetch_ok"))
         .groupBy("host")
@@ -1053,52 +1087,6 @@ def run_round(
         .groupBy("host")
         .agg(F.sum("fetched").alias("fetched"))
     )
-
-    if collect_metrics:
-        perp_stats = results.agg(
-            F.count(F.lit(1)).alias("scored"),
-            F.min(F.when(F.col("perp") > 0, F.col("perp"))).alias("perp_min"),
-            F.max("perp").alias("perp_max"),
-            F.avg(F.when(F.col("perp") > 0, F.col("perp"))).alias("perp_avg"),
-            F.count(F.when(F.col("perp") <= 1, 1)).alias("n_rejected_pages"),
-        ).collect()[0]
-        directive_counts = {
-            f"n_directive_{r['directive']}": r["c"]
-            for r in new_unique.groupBy("directive").agg(F.count(F.lit(1)).alias("c")).collect()
-        }
-        metrics = {
-            "round": round_no,
-            "admitted": admitted.count(),
-            "fetched": scored.filter(F.col("fetch_ok")).count(),
-            "scored": perp_stats["scored"],
-            "perp_min": perp_stats["perp_min"],
-            "perp_max": perp_stats["perp_max"],
-            "perp_avg": perp_stats["perp_avg"],
-            "n_rejected_pages": perp_stats["n_rejected_pages"],
-            "urls_new": new_unique.count(),
-            **directive_counts,
-        }
-        if _bloom_fresh is not None:
-            # pre-filter effectiveness: `fresh` candidates skipped the exact
-            # seen anti-join entirely; only `suspect` probed it (diagnostic
-            # path only — bench mode stays action-free)
-            metrics["bloom_fresh"] = _bloom_fresh.count()
-            if _bloom_suspect is not None:
-                metrics["bloom_suspect"] = _bloom_suspect.count()
-        partition_metrics = (
-            new_unique.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("round", F.lit(round_no))
-        )
-    else:
-        # bench mode: throughput counters only, all lazy. None: the driver
-        # fills this by counting the cached discovery set — the SAME
-        # definition in every regime: unique in-scope candidates after the
-        # seen anti-join, before the robots gate (robots-blocked URLs did the
-        # full expansion work and are marked seen, they just never enqueue).
-        # `fetched` comes from the (tiny) host_fetched table at state-commit.
-        metrics = {"round": round_no, "urls_discovered": None}
-        partition_metrics = spark.createDataFrame([], "partition_id int, rows long, round int")
 
     if state.bloom is not None:
         from topicrawler_spark.crawl.bloom import bloom_add
@@ -1118,13 +1106,21 @@ def run_round(
     if prereq_mode:
         seen_segment = seen_segment.unionByName(prereqs.select("url_hash", "canon"))
     return new_state, RoundResult(
-        fetch_log, results, metrics, partition_metrics,
+        fetch_log, results, {"round": round_no},
         seen_extra=prereqs.select("url_hash", "canon") if prereq_mode else None,
-        cached=(admitted,) + score_cached + zip_cached + prereq_cached + (new_unique,),
-        # the per-round discovery counter: the deduped candidate set, straight
-        # off its cache — counting `enq` would re-run the robots UDF
-        enqueued=new_unique,
-        score_cache=score_cached[-1],
-        score_prefill=score_cached[:-1],
+        cached=(admitted,) + score_prefill + (scored,) + zip_cached + prereq_cached
+        + (new_unique,),
+        discovered=new_unique,
+        observed=tuple(observed),
+        score_prefill=score_prefill,
         seen_segment=seen_segment,
     )
+
+
+def _observe(df: DataFrame, observed: list, *metrics: Column) -> DataFrame:
+    """``df`` with named aggregates that report on the first job computing
+    it — no job of their own. Observe only frames that are cached (a cached
+    frame reports once, on its fill) and never above a lazy checkpoint."""
+    obs = Observation()
+    observed.append(obs)
+    return df.observe(obs, *metrics)

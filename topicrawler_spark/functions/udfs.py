@@ -81,6 +81,22 @@ def extract_outlinks_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+def _page_frame(html: pd.Series, base_url: pd.Series, clean, tail: str, of_text):
+    """The per-page loop both page UDFs share: decode once, extract the
+    scoring text and the outlinks, then ``of_text(text)`` fills the UDF's
+    own ``tail`` column (a perplexity or the gated n-grams)."""
+    texts, links, tails = [], [], []
+    for b, base in zip(html, base_url):
+        h = _decode(b)
+        t = java_trim(extract_text(h, clean))
+        texts.append(t)
+        links.append(
+            [{"url": u, "hop": hp} for u, hp in extract_outlinks(h, base or "")]
+        )
+        tails.append(of_text(t))
+    return pd.DataFrame({"text": texts, "outlinks": links, tail: tails})
+
+
 def make_page_process_udf(scorer_broadcast, cleaner: str = "ext"):
     """html -> (text, outlinks, perp) in ONE Arrow pass.
 
@@ -102,16 +118,7 @@ def make_page_process_udf(scorer_broadcast, cleaner: str = "ext"):
     @F.pandas_udf(_PAGE_TYPE)
     def page_process(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
         scorer = scorer_broadcast.value
-        texts, links, perps = [], [], []
-        for b, base in zip(html, base_url):
-            h = _decode(b)
-            t = java_trim(extract_text(h, clean))
-            texts.append(t)
-            links.append(
-                [{"url": u, "hop": hp} for u, hp in extract_outlinks(h, base or "")]
-            )
-            perps.append(scorer.score_page_text(t))
-        return pd.DataFrame({"text": texts, "outlinks": links, "perp": perps})
+        return _page_frame(html, base_url, clean, "perp", scorer.score_page_text)
 
     return page_process
 
@@ -146,22 +153,17 @@ def make_page_ngrams_udf(
     @F.pandas_udf(_PAGE_NG_TYPE)
     def page_ngrams(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
         sm = SentenceMaker(min_sentence_words, language_code)
-        texts, links, ngrams = [], [], []
-        for b, base in zip(html, base_url):
-            h = _decode(b)
-            t = java_trim(extract_text(h, clean))
-            texts.append(t)
-            links.append(
-                [{"url": u, "hop": hp} for u, hp in extract_outlinks(h, base or "")]
-            )
+
+        def gated(t: str) -> list[str]:
             gs: list[str] = []
             for sentence in sm.sentences(t):
                 ng = provider_ngrams(sentence, order, language_code)
                 if len(ng) < 1 or len(ng[-1]) < order:
                     continue  # the reference's zero-contribution gate
                 gs.extend(" ".join(g) for g in ng)
-            ngrams.append(gs)
-        return pd.DataFrame({"text": texts, "outlinks": links, "ngrams": ngrams})
+            return gs
+
+        return _page_frame(html, base_url, clean, "ngrams", gated)
 
     return page_ngrams
 

@@ -358,22 +358,21 @@ def _hist_suffix(toks: Column, n: int, j: int) -> Column:
 
 def _join_stats_keys(
     ngrams_df: DataFrame,
-    stats: DataFrame,
+    stats: DataFrame | StatsLookup,
     keys: dict[str, Column],
     cols: list[str],
-    dims: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Left-join the stats dimension once per key expression; joined columns
     are prefixed ``_{tag}_``. All equi-joins on the ngram string (broadcast
-    or SMJ under AQE). ``dims`` (from ``build_stats_lookup``) supplies the
-    per-tag aliased dimension DataFrames prebuilt once per campaign —
-    rebuilding them per scoring call costs ~800 py4j round trips of serial
-    driver time per crawl round."""
+    or SMJ under AQE). ``stats`` may be a ``build_stats_lookup`` result
+    instead of the dimension: its per-tag aliased dimension DataFrames are
+    prebuilt once per campaign — rebuilding them per scoring call costs ~800
+    py4j round trips of serial driver time per crawl round."""
     out = ngrams_df
     for tag, key_expr in keys.items():
         dim = (
-            dims[tag]
-            if dims is not None
+            stats.dims[tag]
+            if isinstance(stats, StatsLookup)
             else stats.select(
                 F.col("ngram").alias(f"_key_{tag}"),
                 *[F.col(c).alias(f"_{tag}_{c}") for c in cols],
@@ -439,11 +438,10 @@ def build_stats_lookup(
 
 def _join_stats_keys_pivot(
     ngrams_df: DataFrame,
-    stats: DataFrame,
+    stats: DataFrame | StatsLookup,
     keys: dict[str, Column],
     cols: list[str],
     ngram_col: str = "ngram",
-    lookup: StatsLookup | None = None,
 ) -> DataFrame:
     """Single-exchange twin of ``_join_stats_keys`` for inputs whose
     ``ngram_col`` values are UNIQUE (the per-round distinct-ngram scoring
@@ -463,10 +461,14 @@ def _join_stats_keys_pivot(
 
     Input rows beyond ``ngram_col`` are NOT carried (callers on the distinct
     path have none); duplicate ngram values would collapse — callers must
-    guarantee uniqueness. ``lookup`` (a ``build_stats_lookup`` result)
-    supplies the round-invariant plan fragments prebuilt once per campaign."""
-    if lookup is None or lookup.ngram_col != ngram_col:
-        lookup = build_stats_lookup(stats, keys, cols, ngram_col)
+    guarantee uniqueness. ``stats`` may be a ``build_stats_lookup`` result
+    instead of the dimension: the round-invariant plan fragments prebuilt
+    once per campaign, which carry their own dimension."""
+    lookup = (
+        stats
+        if isinstance(stats, StatsLookup)
+        else build_stats_lookup(stats, keys, cols, ngram_col)
+    )
     tagged = ngrams_df.select(*lookup.probe_cols)
     hits = tagged.join(lookup.dim, "_key", "left")
     return hits.groupBy("_pg").agg(*lookup.aggs).withColumnRenamed("_pg", ngram_col)
@@ -655,13 +657,12 @@ def kn_join_exprs(
 
 def score_kn_join_with_stats(
     ngrams_df: DataFrame,
-    stats: DataFrame,
+    stats: DataFrame | StatsLookup,
     order: int,
     consts: dict,
     ngram_col: str = "ngram",
     exprs: tuple[dict[str, Column], Column, list[str]] | None = None,
     unique_input: bool = False,
-    lookup: StatsLookup | None = None,
 ) -> DataFrame:
     """``score_kn_join`` against a prebuilt ``kn_join_setup`` dimension.
     Pass ``exprs`` (a ``kn_join_exprs`` result) to reuse the Column trees
@@ -669,22 +670,18 @@ def score_kn_join_with_stats(
     a single-column DataFrame of DISTINCT ngrams — the per-round scoring
     path) routes through the single-exchange explode/join/pivot form
     (``_join_stats_keys_pivot``) instead of 2n-1 stats joins; results are
-    identical (parity-tested). ``lookup`` (a ``build_stats_lookup`` result)
-    reuses the round-invariant dimension/agg plan fragments — with exprs
-    and lookup supplied, a scoring call costs ~1/3 the py4j round trips."""
+    identical (parity-tested). Passing a ``build_stats_lookup`` result as
+    ``stats`` reuses the round-invariant dimension/agg plan fragments (the
+    lookup carries the dimension it was built from) — with exprs and a
+    lookup supplied, a scoring call costs ~1/3 the py4j round trips."""
     if exprs is None:
         exprs = kn_join_exprs(order, consts, ngram_col)
     keys, kn_log10, added = exprs
     stat_cols = ["cnt", "nf_tot", "np_tot", "nfp_tot"]
     if unique_input:
-        out = _join_stats_keys_pivot(
-            ngrams_df, stats, keys, stat_cols, ngram_col, lookup=lookup
-        )
+        out = _join_stats_keys_pivot(ngrams_df, stats, keys, stat_cols, ngram_col)
     else:
-        out = _join_stats_keys(
-            ngrams_df, stats, keys, stat_cols,
-            dims=lookup.dims if lookup is not None else None,
-        )
+        out = _join_stats_keys(ngrams_df, stats, keys, stat_cols)
     return out.withColumn("kn_log10", kn_log10).drop(*added)
 
 

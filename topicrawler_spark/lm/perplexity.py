@@ -253,7 +253,7 @@ def build_join_scorer(
     )
     unk = spark.createDataFrame([(" ".join([UNKNOWN_WORD] * order),)], "ngram string")
     row = score_kn_join_with_stats(
-        unk, stats, order, consts, exprs=exprs, unique_input=pivot, lookup=lookup
+        unk, lookup, order, consts, exprs=exprs, unique_input=pivot
     ).collect()[0]
     lp = row["kn_log10"]
     base = math.pow(10.0, -lp) if lp is not None and math.isfinite(lp) else 0.0
@@ -280,8 +280,7 @@ def score_pages_join(pages, js: JoinScorer, id_col: str = "canon", ngrams_col: s
     expl = pages.select(F.col(id_col).alias("_pid"), F.explode(ngrams_col).alias("ngram"))
     uniq = expl.select("ngram").distinct()
     scored = score_kn_join_with_stats(
-        uniq, js.stats, js.order, js.consts, exprs=js.exprs, unique_input=js.pivot,
-        lookup=js.lookup,
+        uniq, js.lookup, js.order, js.consts, exprs=js.exprs, unique_input=js.pivot
     ).select("ngram", "kn_log10")
     return (
         expl.join(scored, "ngram")
